@@ -8,7 +8,7 @@ extract/transform runs as ONE grouped Spark job for all entities
 (``entity_funnel_metrics``) instead of the reference's sequential
 per-entity loop of 4 Drill queries each. Presentation then fans out from
 the collected one-row-per-entity result, which is driver-sized no matter
-how large the raw data was.
+how large the raw data was. A failed entity makes ``main`` exit 1.
 """
 
 from __future__ import annotations
@@ -62,8 +62,10 @@ def run(
     date_spec: str | None = None,
     cfg: EngineConfig | None = None,
     recipients_path: str = "recipients.json",
+    failed: list[str] | None = None,
 ) -> list[str]:
-    """Run the pipeline; returns the list of report files written."""
+    """Run the pipeline; returns the list of report files written. The id
+    of every entity whose report raised is appended to ``failed``."""
     cfg = cfg or load_config()
     if date_spec is None:
         date_spec = (date.today() - timedelta(days=1)).strftime("%d_%m_%Y")
@@ -120,6 +122,8 @@ def run(
             log.info("%s: written %s; email %s", entity_id, path, "sent" if sent else "skipped")
         except Exception as e:  # noqa: BLE001 — per-entity fault isolation (reference :216-243)
             log.error("%s: error: %s", entity_id, e)
+            if failed is not None:
+                failed.append(entity_id)
     return written
 
 
@@ -134,7 +138,11 @@ def main(argv: list[str] | None = None) -> int:
 
     from funnel_report_etl_pipeline__spark.session import get_spark
 
-    written = run(get_spark(), demo=args.demo, date_spec=args.date)
+    failed: list[str] = []
+    written = run(get_spark(), demo=args.demo, date_spec=args.date, failed=failed)
+    if failed:
+        log.error("%d entities failed: %s", len(failed), ", ".join(failed))
+        return 1
     if not written and not args.demo:
         log.warning(
             "No reports generated (no data in the landing zone). "

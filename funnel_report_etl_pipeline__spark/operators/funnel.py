@@ -12,10 +12,14 @@ Scale: the four input aggregates reduce 100 TB of raw events to four
 1-row frames executor-side (partial→final hash aggregation); only scalar
 totals ever reach the cross join. Per-entity reports for N entities run as
 ONE grouped job (``entity_funnel_metrics``), not the reference's
-sequential per-entity loop (run_reports.py:212).
+sequential per-entity loop (run_reports.py:212): the four datasets are
+unioned by name and summed by one ``groupBy("entity_id")`` — one scan per
+dataset, one shuffle, no joins.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -209,51 +213,39 @@ def entity_funnel_metrics(
     """All-entity metrics in ONE Spark job (the reference loops entities
     sequentially on the driver, run_reports.py:212-243).
 
-    Four grouped aggregations co-partitioned on the entity key, then
-    equi-joined. At 100 TB with a skewed entity distribution, AQE skew-join
-    handles the hot entities; the join sides are already aggregated (one
-    row per entity) so the join input is tiny regardless of raw volume.
+    Each dataset is projected to ``entity_id`` plus its typed cells (the
+    casts of the 1-row totals above), the projections are unioned by name
+    and ONE ``groupBy("entity_id")`` sums them: one scan per dataset, one
+    shuffle. SUM and COUNT skip the other datasets' NULL cells, so an
+    entity seen in ANY dataset gets a row with zeros elsewhere, as the
+    reference (which queries each dataset per entity) reports it. Rows
+    with a NULL entity key belong to no report and are dropped in the scan.
     """
-    st = uf_stages.groupBy(F.col("Entity_ID").alias("entity_id")).agg(
-        *[F.coalesce(F.sum(trunc_long(c)), F.lit(0)).alias(c) for c in STAGE_COLUMNS]
-    )
-    ot = otp_summary.groupBy("entity_id").agg(
-        *[F.sum(F.col(c).try_cast("double")).alias(f"Total_{c}") for c in OTP_COLUMNS]
-    )
-    dc = discovery_summary.groupBy("entity_id").agg(
-        *[
-            F.sum(F.nullif(F.col(c), F.lit("")).try_cast("double")).alias(c + "_disc")
-            for c in DISCOVERY_COLUMNS
-        ]
-    )
-    fi = (
-        user_funnel.filter(
-            F.col("fetch_status").isin("Not Attempted", "Failed", "Success")
-            & (F.col("fetch_status") != "")
-        )
-        .groupBy("entity_id")
-        .agg(
-            F.count(F.when(F.col("fetch_status") == "Success", 1)).alias("fi_success"),
-            F.count(F.when(F.col("fetch_status") == "Failed", 1)).alias("fi_failed"),
-        )
-    )
-    # entity spine = every entity seen in ANY of the four datasets: the
-    # reference queries each dataset independently per entity, so an entity
-    # with e.g. only OTP rows still gets a (zeros-elsewhere) report row —
-    # anchoring on uf_stages alone would silently drop it. The aggregates
-    # are one-row-per-entity, so the distinct-union spine is tiny.
-    spine = (
-        st.select("entity_id")
-        .union(ot.select("entity_id"))
-        .union(dc.select("entity_id"))
-        .union(fi.select("entity_id"))
-        .distinct()
-    )
-    wide = (
-        spine.join(st, "entity_id", "left")
-        .join(ot, "entity_id", "left")
-        .join(dc, "entity_id", "left")
-        .join(fi, "entity_id", "left")
+    status = F.col("fetch_status")
+    branches = [
+        uf_stages.select(
+            F.col("Entity_ID").alias("entity_id"),
+            *[trunc_long(c).alias(c) for c in STAGE_COLUMNS],
+        ),
+        otp_summary.select(
+            "entity_id", *[F.col(c).try_cast("double").alias(f"Total_{c}") for c in OTP_COLUMNS]
+        ),
+        discovery_summary.select(
+            "entity_id",
+            *[
+                F.nullif(F.col(c), F.lit("")).try_cast("double").alias(c + "_disc")
+                for c in DISCOVERY_COLUMNS
+            ],
+        ),
+        user_funnel.filter(status.isin("Not Attempted", "Failed", "Success")).select(
+            "entity_id", "fetch_status"
+        ),
+    ]
+    rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), branches)
+    wide = rows.filter(F.col("entity_id").isNotNull()).groupBy("entity_id").agg(
+        *[F.sum(c).alias(c) for c in rows.columns if c not in ("entity_id", "fetch_status")],
+        F.count(F.when(status == "Success", 1)).alias("fi_success"),
+        F.count(F.when(status == "Failed", 1)).alias("fi_failed"),
     )
     return wide.select("entity_id", *_metrics_columns())
 

@@ -1,16 +1,16 @@
 """Round-6 queries: the grouped all-entity funnel production path under a
 full value-hash oracle, plus round-6 additions.
 
-``entity_funnel_metrics`` (operators/funnel.py:203) is the biggest
+``entity_funnel_metrics`` (operators/funnel.py:207) is the biggest
 architectural win over the reference — ONE grouped Spark job where
 run_reports.py:212-243 loops entities sequentially on the driver — but
 until this round it was golden-tested only. Here the four reference
 input datasets (uf-stages / otp-summary / discovery-summary /
 user-funnel, SURVEY.md §2.1) are derived deterministically from the
 shared ``events`` parquet over PARTIALLY-OVERLAPPING entity ranges, so
-the entity-spine union semantics (an entity present only in OTP data
-still gets a zeros-elsewhere report row) is exercised by data, and the
-whole waterfall arithmetic is hash-verified against a DuckDB twin.
+the union semantics (an entity present only in OTP data still gets a
+zeros-elsewhere report row) is exercised by data, and the whole
+waterfall arithmetic is hash-verified against a DuckDB twin.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # Entity key: user_id % 17, as the reference's string Entity_ID. The four
 # datasets cover overlapping-but-distinct ranges so some entities exist in
-# only one dataset — the spine-union case the reference handles by querying
+# only one dataset — the case the reference handles by querying
 # each dataset independently per entity (run_reports.py:212).
 _ENT = "CAST(user_id % 17 AS VARCHAR)"  # DuckDB oracle spelling
 
@@ -108,12 +108,13 @@ def _oracle_stage_cols() -> str:
     )
 
 
-# The oracle mirrors entity_funnel_metrics exactly: four grouped aggregates,
-# distinct-union spine, left joins, then the waterfall arithmetic of
-# _metrics_columns (operators/funnel.py:95-167) — including total_users'
-# 7-column formula, the possibly-negative otp_ok_drop, and the
-# cross-dataset fi_fetch_drop. All cell values are integral so DuckDB's
-# round-on-cast and Spark's truncate-on-cast agree.
+# The oracle is a DIFFERENT plan that must stay value-equal to
+# entity_funnel_metrics' single union aggregate: four grouped aggregates,
+# a distinct-union entity spine and four left joins, then the waterfall
+# arithmetic of _metrics_columns (operators/funnel.py:99-171) — including
+# total_users' 7-column formula, the possibly-negative otp_ok_drop, and
+# the cross-dataset fi_fetch_drop. All cell values are integral so
+# DuckDB's round-on-cast and Spark's truncate-on-cast agree.
 _ENTITY_WATERFALL_ORACLE = f"""
 WITH base AS (
   SELECT *, {_ENT} AS entity, CAST(user_id % 17 AS BIGINT) AS ent_i FROM events
@@ -216,15 +217,14 @@ FROM m
 )
 def entity_funnel_waterfall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-entity funnel waterfall through the REAL production operator
-    (`entity_funnel_metrics`, operators/funnel.py:203): four grouped
-    aggregations on the entity key, distinct-union entity spine, left
-    joins, then the reference waterfall arithmetic per entity — one Spark
-    job where the reference loops entities on the driver
-    (run_reports.py:212-243). Input datasets are derived from events over
-    overlapping entity ranges so the spine's only-in-one-dataset case is
-    live. Each join side is pre-aggregated to one row per entity, so at
-    100 TB the join input stays |entities|-sized regardless of raw
-    volume."""
+    (`entity_funnel_metrics`, operators/funnel.py:207): the four datasets
+    unioned by name and summed by ONE entity-key aggregate, then the
+    reference waterfall arithmetic per entity — one Spark job where the
+    reference loops entities on the driver (run_reports.py:212-243).
+    Input datasets are derived from events over overlapping entity ranges
+    so the only-in-one-dataset case is live. The single shuffle carries
+    map-side partial sums, so at 100 TB its input stays
+    |entities| × partitions regardless of raw volume."""
     from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
 
     uf, ot, dc, fi = _entity_inputs(spark, sf_dir)

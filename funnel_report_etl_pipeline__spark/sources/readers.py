@@ -113,36 +113,31 @@ def funnel_csv_paths(base: str, dataset: str, window: DateWindow) -> list[str]:
     ]
 
 
+def _hadoop_fs(spark: SparkSession, paths: list[str]):
+    """(Hadoop Path class, FileSystem of the first of ``paths``), looked up
+    once per read: all paths of a read share its base directory's
+    filesystem, and each py4j lookup is a driver↔JVM round trip."""
+    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    return jvm_path, jvm_path(paths[0]).getFileSystem(hconf)
+
+
 def _existing_paths(spark: SparkSession, paths: list[str]) -> list[str]:
     """Filter to paths that exist, via the Hadoop FileSystem API so it works
     against HDFS/S3/GCS as well as file:// (os.path.exists only sees the
     driver's local disk)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    out = []
-    for p in paths:
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(hconf)
-        if fs.exists(hpath):
-            out.append(p)
-    return out
+    jvm_path, fs = _hadoop_fs(spark, paths)
+    return [p for p in paths if fs.exists(jvm_path(p))]
 
 
 def _matching_globs(spark: SparkSession, globs: list[str]) -> list[str]:
     """Keep only glob patterns that match ≥1 path (Hadoop globStatus).
     Spark raises PATH_NOT_FOUND for a glob with zero matches, so an empty
     month in a window must be dropped BEFORE the read — not caught after,
-    which would throw away the other months' data."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    out = []
-    for g in globs:
-        hpath = jvm.org.apache.hadoop.fs.Path(g)
-        fs = hpath.getFileSystem(hconf)
-        status = fs.globStatus(hpath)
-        if status is not None and len(status) > 0:
-            out.append(g)
-    return out
+    which would throw away the other months' data. globStatus returns
+    None or an empty array when nothing matches."""
+    jvm_path, fs = _hadoop_fs(spark, globs)
+    return [g for g in globs if fs.globStatus(jvm_path(g))]
 
 
 def month_glob_paths(base: str, dataset: str, window: DateWindow) -> list[str]:

@@ -105,6 +105,95 @@ def test_single_day_equals_degenerate_range(spark, tmp_path, landing):
     assert open(w1[0]).read() == open(w2[0]).read()
 
 
+def _append_rows(base, dataset: str, rows: list[list[str]]) -> None:
+    """Append ``rows`` to the ``dataset`` CSV of every day in the zone."""
+    for day in base.iterdir():
+        with open(day / f"{STEMS[dataset]}-{day.name}.csv", "a", newline="") as f:
+            csv.writer(f).writerows(rows)
+
+
+@pytest.fixture()
+def metrics_frames(monkeypatch):
+    """The metrics frames ``cli.run`` builds, each with its physical plan
+    taken before execution (after it, AQE also prints the final plan)."""
+    from funnel_report_etl_pipeline__spark import cli
+
+    seen: list[tuple] = []
+    build = cli.entity_funnel_metrics
+
+    def record(*frames):
+        df = build(*frames)
+        seen.append((df, df._jdf.queryExecution().executedPlan().toString()))
+        return df
+
+    monkeypatch.setattr(cli, "entity_funnel_metrics", record)
+    return seen
+
+
+def test_metrics_plan_scans_each_csv_once(spark, tmp_path, landing, metrics_frames):
+    """One scan per dataset and one shuffle: the four datasets are unioned
+    and aggregated once, with no entity spine and no joins."""
+    base, rec = landing
+    cfg = EngineConfig(data_base_path=str(base), output_dir=str(tmp_path / "out"))
+    run(spark, date_spec="14_02_2026 -> 15_02_2026", cfg=cfg, recipients_path=str(rec))
+    [(_, plan)] = metrics_frames
+    assert plan.count("FileScan csv") == 4, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("Exchange hashpartitioning(entity_id") == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_null_entity_rows_are_dropped(spark, tmp_path, landing, metrics_frames):
+    """Rows with an empty entity key belong to no report: they change no
+    real entity's report and produce no NULL-key metrics row."""
+    base, rec = landing
+    spec = "14_02_2026 -> 15_02_2026"
+    cfg = EngineConfig(data_base_path=str(base), output_dir=str(tmp_path / "before"))
+    [before] = run(spark, date_spec=spec, cfg=cfg, recipients_path=str(rec))
+    _append_rows(base, "uf_stages", [["", "14-02-2026", *["7"] * 11]])
+    _append_rows(base, "otp_summary", [["", "7", "7", "7"]])
+    _append_rows(base, "discovery_summary", [["", "7", "7", "7", "7", "7"]])
+    _append_rows(base, "user_funnel", [["", "Success"], ["", "Failed"]])
+    cfg = EngineConfig(data_base_path=str(base), output_dir=str(tmp_path / "after"))
+    [after] = run(spark, date_spec=spec, cfg=cfg, recipients_path=str(rec))
+    assert open(after).read() == open(before).read()
+    df, _ = metrics_frames[-1]
+    assert [r.entity_id for r in df.collect()] == ["FIU_001"]
+
+
+def test_main_exits_nonzero_when_an_entity_fails(spark, tmp_path, landing, monkeypatch):
+    """One entity's report write raises: the other entity's report is still
+    written, and the exit code says the run was not clean."""
+    from funnel_report_etl_pipeline__spark import cli, session
+
+    base, _ = landing
+    _append_rows(base, "uf_stages", [["FIU_002", "14-02-2026", *["50"] * 11]])
+    _append_rows(base, "otp_summary", [["FIU_002", "1", "2", "3"]])
+    _append_rows(base, "discovery_summary", [["FIU_002", "1", "2", "3", "4", "5"]])
+    _append_rows(base, "user_funnel", [["FIU_002", "Success"]])
+    (tmp_path / "recipients.json").write_text(
+        json.dumps({"to": {"FIU_001": ["a@x.com"], "FIU_002": ["b@x.com"]}})
+    )
+    out = tmp_path / "out"
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("DATA_BASE_PATH", str(base))
+    monkeypatch.setenv("OUTPUT_DIR", str(out))
+    monkeypatch.setattr(session, "get_spark", lambda: spark)
+    write = cli.write_funnel_report
+
+    def failing_write(table, path):
+        if "FIU_001" in path:
+            raise OSError("disk full")
+        return write(table, path)
+
+    monkeypatch.setattr(cli, "write_funnel_report", failing_write)
+    assert cli.main(["--date", "14_02_2026 -> 15_02_2026"]) == 1
+    names = [p.name for p in out.iterdir()]
+    assert names and all(n.startswith("FIU_002") for n in names), names
+    monkeypatch.setattr(cli, "write_funnel_report", write)
+    assert cli.main(["--date", "14_02_2026 -> 15_02_2026"]) == 0
+
+
 def test_safe_filename():
     assert (
         safe_filename("fiu@bank", "01_01_2026 -> 05_01_2026")

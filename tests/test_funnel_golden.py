@@ -122,16 +122,29 @@ def test_entity_grouped_matches_single(spark):
 def test_entity_only_in_otp_data_still_reported(spark):
     """An entity with rows in ONLY one of the four datasets must still get
     a metrics row (zeros elsewhere) — the reference queries each dataset
-    independently per entity, so it reports such entities too."""
+    independently per entity, so it reports such entities too. Checked for
+    each dataset in turn, OTP first."""
     from funnel_report_etl_pipeline__spark.operators.funnel import entity_funnel_metrics
 
-    st, ot, dc, fi = mock_funnel_frames(spark)
-    # FIU_OTHER appears in every mock frame; drop it from all but OTP
-    st2 = st.filter(st.Entity_ID != "FIU_OTHER")
-    dc2 = dc.filter(dc.entity_id != "FIU_OTHER")
-    fi2 = fi.filter(fi.entity_id != "FIU_OTHER")
-    rows = {r.entity_id: r for r in entity_funnel_metrics(st2, ot, dc2, fi2).collect()}
-    assert "FIU_OTHER" in rows, "entity present only in OTP data was dropped"
-    other = rows["FIU_OTHER"]
-    assert other.otp_wrong == 777  # its OTP data is reported
-    assert other.fi_req_ok == 0  # everything else degrades to zero
+    frames = mock_funnel_frames(spark)
+    keys = ("Entity_ID", "entity_id", "entity_id", "entity_id")
+    # FIU_OTHER appears in every mock frame with cells 9999 (stages),
+    # 777 (OTP, discovery) and one Success fetch; keep it in one frame only
+    expected = {
+        1: {"otp_wrong": 777, "otp_miss": 777, "total_users": 0, "d3": 0, "fi_req_ok": 0},
+        0: {"total_users": 7 * 9999, "d1": 9999, "fetch_ok": 9999, "otp_wrong": 0, "d3": 0,
+            "fi_req_ok": 0},
+        2: {"d3": 5 * 777, "no_rec": 777, "total_users": 0, "otp_wrong": 0, "fi_req_ok": 0},
+        3: {"fi_req_ok": 1, "total_users": 0, "otp_wrong": 0, "d3": 0},
+    }
+    for keep, want in expected.items():
+        only = [
+            df if i == keep else df.filter(df[key] != "FIU_OTHER")
+            for i, (df, key) in enumerate(zip(frames, keys))
+        ]
+        rows = {r.entity_id: r.asDict() for r in entity_funnel_metrics(*only).collect()}
+        assert "FIU_OTHER" in rows, f"entity present only in frame {keep} was dropped"
+        got = {k: rows["FIU_OTHER"][k] for k in want}
+        assert got == want, f"frame {keep}: {got}"
+        # the mock entity, present everywhere, is unaffected
+        assert rows[MOCK_ENTITY]["total_users"] == GOLDEN["total_users"]

@@ -181,10 +181,11 @@ WINDOW_SHUFFLE_BUDGET = {
     "median_order_gap": 1, "top_session_paths": 2, "source_drift_l1": 12,
     "per_source_holdout": 1, "column_stats_orders": 5,
     "train_val_test_split": 0,
-    # round-6 additions: the grouped entity waterfall (8 = four grouped
-    # datasets + spine + re-aggs), the iterative graph pair (per-iteration
-    # contribution shuffles), CDC diff, census joins
-    "entity_funnel_waterfall": 8, "incremental_daily_rollup": 2,
+    # round-6 additions: the grouped entity waterfall (1 = the single
+    # entity-key aggregate over the union of the four datasets), the
+    # iterative graph pair (per-iteration contribution shuffles), CDC
+    # diff, census joins
+    "entity_funnel_waterfall": 1, "incremental_daily_rollup": 2,
     "linear_attribution": 2, "vocab_tokenize": 2, "fuzzy_dedup_names": 2,
     # pagerank: 11 since the round-14 rewrite (deg rides inside ranks —
     # one join per iteration instead of two, node count as a broadcast
